@@ -26,140 +26,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["revenue_agg"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness check covers the first ~50 registry entries
-# per round. Priority for the CORRECTNESS_r08 window, front to back:
-# the query new in round 8 (first-ever driver record:
-# dedup_incremental_stream, the index-maintaining streaming dedup),
-# then the two whose PLANS changed this round (dedup_embedding /
-# dedup_consensus now pick the LSH bit-width from N at plan time —
-# byte-identical buckets at sf0.01 where the formula clamps to the
-# historical 6, re-certified anyway), then the r07 order unchanged.
-# Earlier green rows stand where the window ends.
-_RECHECK_FIRST = [
-    # (0) NEW in round 10 — first-ever driver record: the sharded
-    # >2.1 M-vector embedding near-dup path (r09 verdict item 1)
-    "dedup_embedding_sharded",
-    # (0) NEW in round 8 — first-ever driver record
-    "dedup_incremental_stream",
-    # (0a) r08 plan-changing edits (adaptive LSH bits)
-    "dedup_embedding", "dedup_consensus",
-    # (1) round-7 window
-    "video_frame_stats", "multimodal_decode_stream",
-    "layout_composed_revenue", "bpe_merge_table",
-    # (0a) r07 value-changing edits: the asset cycle gained a JPEG leg
-    # (i%4 -> i%5) and then an uncompressed-DIB AVI leg (i%5 -> i%6),
-    # so every row's kind/stats shifted
-    "multimodal_pixel_stats",
-    # (1) round-6 window (r06-green, freshest)
-    "corpus_capstone",
-    "bucketed_join_revenue", "incremental_mv_revenue",
-    "events_corr_hourly", "approx_join_size",
-    "partition_pruned_revenue", "ivf_probe_curve", "tfidf_doc_pairs",
-    "bpe_apply_merge", "graph_bfs_hops", "events_twa", "session_paths",
-    "customer_rfm", "order_backlog_monthly", "events_streak_lengths",
-    # (0b) r06 semantic-preserving changes that must re-certify under
-    # their new plans/derivations: scaled k-means k (semdedup), measured
-    # salt factor (skewed_join_salted), size-adaptive corpus_join
-    # (broadcast at fixture scale), DOUBLE-exact VALUES literals +
-    # empty-input guards (rank probes), w4 chained-stream state width
-    "semdedup_embeddings", "skewed_join_salted",
-    "dedup_incremental", "containment_pairs", "moss_matches",
-    "ngram_jaccard_pairs", "dedup_near_minhash", "minhash_band_scurve",
-    "bigram_novelty", "dedup_rate_by_source", "dedup_consensus",
-    "dedup_clusters", "dedup_clusters_star", "cluster_representatives",
-    "dedup_aware_split", "entity_canonicalize", "kmeans_embeddings",
-    "pagerank_docs", "triangle_count", "jaccard_est_error",
-    "events_copair_hourly_stream",
-    "order_price_quartiles", "priority_price_distribution",
-    "price_percentiles_cont", "mad_outliers",
-    # (1) r05 first-record queries (r05-green; freshest behind the r06
-    # changes)
-    "ann_recall_curve", "retrieval_eval",
-    "vocab_coverage", "key_skew_histogram",
-    "events_late_audit", "zorder_locality", "top_terms",
-    "forecast_revenue", "user_retention_cohorts",
-    "orders_nested", "augment_dropout",
-    "bpe_first_merges", "unigram_score",
-    "mmr_rerank",
-    # (2) r04 wave
-    "exact_substr_spans", "strip_dup_spans", "corpus_diff",
-    "hybrid_search_rrf", "similarity_ivf_trained",
-    "revenue_trend_ols", "events_chi2", "hourly_interpolate",
-    "user_first_last_events", "label_propagation_lang",
-    "winnowing_fingerprints", "fuzzy_name_pairs",
-    "bm25_search",
-    # (3) streaming + graph re-certification backlog
-    "price_deciles", "orders_pareto",
-    "events_attribution_stream", "events_copair_stream",
-    "events_dedup_stream", "events_rate_limited_stream",
-    "events_enrich_stream", "user_profiles_stream",
-    "events_tumbling_stream", "events_sessionize_stream",
-    "events_hopping_stream",
-    "duplicate_spans",
-    "dedup_embedding", "similarity_topk",
-    # (4) r03 wave re-certification backlog (driver r03-green; unchanged)
-    "quality_flags", "returned_items",
-    "important_parts_share", "priority_line_counts",
-    "top_revenue_supplier", "brand_supplier_counts",
-    "promotion_part_suppliers", "repetition_stats", "pii_scan",
-    "clean_corpus", "pack_sequences",
-    "source_mixture_sample", "source_overlap",
-    "events_ks_drift",
-    "approx_distinct_kmv", "hash_embed", "keyword_search",
-    "multimodal_decode", "cdc_snapshot",
-    "pq_codes", "value_outliers",
-    "count_min_users", "sampled_quantiles", "bloom_screen",
-    "similarity_ivfpq", "ledger_asof", "hierarchical_rollup",
-    "corpus_summary", "disjunctive_revenue", "embedding_norm_check",
-    "event_transitions", "events_rate_limited", "monthly_revenue_growth",
-    "nation_pair_trade", "null_semantics",
-    "selective_distinct", "source_drift",
-    "typo_distance", "user_type_overlap",
-]
-_CHECKED_EARLIER = [
-    # r01 window
-    "revenue_agg", "topk_orders", "region_rollup", "window_rank",
-    "set_ops_users", "distinct_counts", "conditional_aggs",
-    "local_supplier_revenue", "customer_order_counts",
-    "orders_with_big_discount", "revenue_rollup", "events_pivot",
-    "events_json", "orderdate_parts", "customer_name_funcs",
-    "embedding_stats", "events_tumbling", "events_sessionize",
-    "ledger_status", "pending_migrations", "applied_semi",
-    "checksum_verify", "rollback_topk", "after_version", "upsert_ledger",
-    "findings_explode", "severity_rollup", "rule_catalog", "text_stats",
-    "token_count", "quality_score", "lang_id_confusion", "text_normalize",
-    "doc_fingerprint", "dedup_exact", "dedup_token_sig",
-    "ngram_jaccard_pairs", "similarity_topk", "events_tumbling_stream",
-    "events_sessionize_stream", "multimodal_decode", "similarity_ivf",
-    "similarity_ann_lsh", "events_asof_purchase", "events_copair_60s",
-    "price_band_join", "supplier_stats",
-    # r02 window (unchanged plans; freshest certification → very back)
-    "approx_events_profile", "big_orders_having",
-    "contamination_check", "cube_status_priority",
-    "deterministic_sample", "doc_chunks", "events_hopping",
-    "events_hopping_stream", "funnel_steps", "grouping_sets_orders",
-    "hourly_event_spine", "label_centroids", "latest_event_per_user",
-    "market_share_by_year", "nation_balance_fullouter",
-    "order_price_quartiles", "orders_above_cust_avg",
-    "orders_exists_notexists", "orders_profile", "price_deciles",
-    "priority_price_distribution", "profit_by_nation_year",
-    "promo_revenue_share", "rich_idle_customers", "scd2_user_status",
-    "set_ops_multiset", "simhash_fingerprint", "similarity_ann_lsh",
-    "similarity_incremental", "similarity_ivf", "sql_revenue_by_nation",
-    "stratified_sample", "suppliers_kept_waiting",
-    "top_supplier_per_part", "top_terms", "train_val_test_split",
-    "unpivot_balances", "user_event_types", "user_profiles_stream",
-    "user_value_10min_sum", "user_value_moving_avg", "weighted_sample",
-    "zscore_events",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    front = [n for n in _RECHECK_FIRST if n in QUERIES]
-    back = [n for n in _CHECKED_EARLIER if n in QUERIES and n not in front]
-    mid = [n for n in QUERIES if n not in front and n not in back]
-    return {n: QUERIES[n] for n in front + mid + back}
+    """One entry per implemented operator from SURVEY.md §2, in registry
+    order."""
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

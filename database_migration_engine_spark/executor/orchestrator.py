@@ -366,28 +366,6 @@ class ParquetLedger:
             self.df().filter(F.col("status") == "applied").orderBy("version")
         )
 
-    def is_applied(self, version: str) -> bool:
-        """L1 point-exists probe (reference internal/tracker/tracker.go:52-64)."""
-        return (
-            self.df()
-            .filter(
-                (F.col("version") == version) & (F.col("status") == "applied")
-            )
-            .limit(1)
-            .count()
-            > 0
-        )
-
-    def get_checksum(self, version: str) -> str:
-        """L5 point lookup; missing version raises
-        (reference internal/tracker/tracker.go:133-149)."""
-        row = (
-            self.df().filter(F.col("version") == version).select("checksum").first()
-        )
-        if row is None:
-            raise TargetNotFoundError(f"migration {version} not in ledger")
-        return row.checksum
-
     def record_applied(
         self, version: str, filename: str, checksum: str, duration_ms: int
     ) -> None:
@@ -405,15 +383,14 @@ class ParquetLedger:
             f" CAST({int(duration_ms)} AS INT) AS duration_ms,"
             f" 'applied' AS status"
         )
-        merged = self.df().join(new, "version", "left_anti").unionByName(new)
-        self._swap_in(merged)
+        self.merge_batch(new)
 
     def merge_batch(self, new_rows: DataFrame) -> None:
         """Multi-row MERGE keyed on version — the batch is authoritative
         for every version it carries (same new-wins semantics as the
         reference's ON CONFLICT DO UPDATE, tracker.go:96-113). Used by
-        the streaming foreachBatch sink; rows must match
-        SCHEMA_MIGRATIONS."""
+        record_applied and the streaming foreachBatch sink; rows must
+        match SCHEMA_MIGRATIONS."""
         merged = (
             self.df()
             .join(new_rows, "version", "left_anti")
@@ -525,13 +502,23 @@ class Executor:
         with AdvisoryFileLock(self.ledger.path):
             self.ledger.acquire_fence()
             self.ledger.ensure()
+            # one ledger read per command: {version: checksum} of the
+            # applied rows, kept current as this loop records migrations
+            applied = {
+                r.version: r.checksum
+                for r in self.ledger.applied()
+                .select("version", "checksum")
+                .collect()
+            }
             for mig in self.from_df(migrations):
-                self._apply_one(mig, dry_run)
+                self._apply_one(mig, dry_run, applied)
         return self.events
 
-    def _apply_one(self, mig: Migration, dry_run: bool) -> None:
+    def _apply_one(
+        self, mig: Migration, dry_run: bool, applied: dict[str, str]
+    ) -> None:
         """E3 (reference internal/executor/executor.go:313-362)."""
-        if self._should_skip(mig):
+        if self._should_skip(mig, applied):
             self._emit(ProgressEvent(mig.version, mig.name, SKIPPED))
             return
         if dry_run:
@@ -554,16 +541,19 @@ class Executor:
             mig.checksum,
             duration_ms,
         )
+        applied[mig.version] = mig.checksum
         self._emit(
             ProgressEvent(mig.version, mig.name, COMPLETED, duration_ms)
         )
 
-    def _should_skip(self, mig: Migration) -> bool:
-        """E2 idempotent skip + tamper check
+    @staticmethod
+    def _should_skip(mig: Migration, applied: dict[str, str]) -> bool:
+        """E2 idempotent skip + tamper check against the command's
+        {version: checksum} read of the applied ledger rows
         (reference internal/executor/executor.go:366-389)."""
-        if not self.ledger.is_applied(mig.version):
+        recorded = applied.get(mig.version)
+        if recorded is None:
             return False
-        recorded = self.ledger.get_checksum(mig.version)
         if recorded != mig.checksum:
             raise ChecksumMismatchError(
                 f"checksum mismatch for {mig.version}: ledger has {recorded},"

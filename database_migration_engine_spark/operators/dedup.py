@@ -265,17 +265,14 @@ def minhash_lsh_pairs(
         ),
     )
 
-    candidates = (
-        corpus_join(
-            banded.toDF("doc_a", "band_id", "band_hash", "hs_a"),
-            banded.toDF("doc_b", "band_id", "band_hash", "hs_b"),
-            ["band_id", "band_hash"],
+    return (
+        _band_join(banded, banded)
+        .filter(F.col("new_doc") < F.col("index_doc"))
+        .select(
+            F.col("new_doc").alias("doc_a"),
+            F.col("index_doc").alias("doc_b"),
+            "est_jaccard",
         )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    return candidates.select(
-        "doc_a", "doc_b", _est_jaccard(num_hashes)
     )
 
 
@@ -313,42 +310,30 @@ def _banded_signatures(
     ).select("doc", "band.band_id", "band.band_hash", "hs")
 
 
-def _est_jaccard(num_hashes: int):
+def _band_join(new_bands: DataFrame, idx_bands: DataFrame) -> DataFrame:
+    """The banded-LSH join: (doc, band_id, band_hash, hs) bands of a new
+    side ⋈ an index side on (band_id, band_hash), deduped across band
+    collisions → (new_doc, index_doc, est_jaccard). The join goes through
+    ``corpus_join``, whose backing-size gate picks the strategy. The
+    streaming drain keeps its plain join (streaming/dedup._pairs): its
+    checkpointed micro-batch sides have no backing files, so the gate
+    would pin sort-merge there, which measured slower than letting Spark
+    broadcast."""
+    pairs = corpus_join(
+        new_bands.toDF("new_doc", "band_id", "band_hash", "hs_a"),
+        idx_bands.toDF("index_doc", "band_id", "band_hash", "hs_b"),
+        ["band_id", "band_hash"],
+    ).dropDuplicates(["new_doc", "index_doc"])
+    return pairs.select("new_doc", "index_doc", _est_jaccard())
+
+
+def _est_jaccard():
     """Fraction of equal signature components from the packed arrays —
-    one zip_with instead of 32 comparison columns."""
-    return (
-        F.expr("size(filter(zip_with(hs_a, hs_b, (x, y) -> x = y), v -> v))")
-        / F.lit(num_hashes)
+    one zip_with instead of one comparison column per hash."""
+    return F.expr(
+        "size(filter(zip_with(hs_a, hs_b, (x, y) -> x = y), v -> v))"
+        " / size(hs_a)"
     ).cast("double").alias("est_jaccard")
-
-
-def minhash_lsh_pairs_incremental(
-    new_docs: DataFrame,
-    index_docs: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    hash_fn: str = "murmur3",
-) -> DataFrame:
-    """Near-dup candidates of a NEW batch against an already-indexed
-    corpus — the production shape of continuous ingestion dedup: the
-    index side's banded signatures are computed once (in practice stored
-    as the dedup index) and the join is new-bands ⋈ index-bands only.
-    Never index×index, so per-batch cost scales with the batch, not the
-    corpus. Output: (new_doc, index_doc, est_jaccard).
-
-    Extends the reference's whole-corpus identity checksum
-    (internal/migration/migration.go:19-23) to the streaming-ingest case;
-    same banded-LSH machinery as minhash_lsh_pairs."""
-    return lsh_join_presigned(
-        minhash_signatures(new_docs, content_col, id_col, num_hashes, n, hash_fn),
-        minhash_signatures(index_docs, content_col, id_col, num_hashes, n, hash_fn),
-        num_hashes=num_hashes,
-        bands=bands,
-        hash_fn=hash_fn,
-    )
 
 
 def lsh_join_presigned(
@@ -364,19 +349,9 @@ def lsh_join_presigned(
     that maintain such an index (or can derive one, e.g. mirrored ids
     share their source text's signature) skip an entire
     tokenize→shingle→hash pass."""
-    candidates = (
-        corpus_join(
-            _banded_signatures(sig_new, num_hashes, bands, hash_fn)
-            .toDF("new_doc", "band_id", "band_hash", "hs_a"),
-            _banded_signatures(sig_idx, num_hashes, bands, hash_fn)
-            .toDF("index_doc", "band_id", "band_hash", "hs_b"),
-            ["band_id", "band_hash"],
-        )
-        .dropDuplicates(["new_doc", "index_doc"])
-    )
-    return candidates.select(
-        "new_doc", "index_doc",
-        _est_jaccard(num_hashes),
+    return _band_join(
+        _banded_signatures(sig_new, num_hashes, bands, hash_fn),
+        _banded_signatures(sig_idx, num_hashes, bands, hash_fn),
     )
 
 

@@ -298,8 +298,9 @@ def adaptive_lsh_bits(
     octave proved that a pinned ``num_bits=6`` grid saturates (E[bucket]
     ∝ N, in-bucket scored pairs ∝ N²: 0.02 B pairs at ×1 → 16.9 B at
     ×30, run aborted), while ``bits ≈ log2(5N/160)`` holds in-bucket
-    work ∝ N at full measured family recall (tools/emb_bits_probe.py:
-    bits=11 at ×30 → 149 s, 870,000/870,000). ``keys_per_vec`` is the
+    work ∝ N at full measured family recall (bits=11 at ×30 → 149 s,
+    870,000/870,000; probe tool since removed, see
+    ``git show 47e7dfd:tools/emb_bits_probe.py``). ``keys_per_vec`` is the
     bucket keys each vector emits per table (1 base + num_probes);
     ``target_bucket`` ≈ 160 is the measured sweet spot at threshold 0.4.
     Fixture anchors: n=2000 (sf0.1) → 6 (the historical pin, so every
@@ -690,38 +691,6 @@ def lsh_near_dup_pairs_sharded(
     return (
         grouped.mapInPandas(job_pairs_batched, out_schema)
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: all (a < b) pairs whose
-    cosine similarity exceeds `threshold`.
-
-    This is the exact O(N²) verify step; at 100 TB candidate generation
-    must come from `ann_lsh_topk`'s bucketing first (same cosine
-    expression, sub-quadratic pair count) — this operator is then applied
-    only within buckets.
-    """
-    a = _prepared(df, id_col, vec_col, "q", dim)
-    b = _prepared(df, id_col, vec_col, "n", dim)
-    dot_expr = (
-        dot_unrolled("qvec", "nvec", dim) if dim else dot("qvec", "nvec")
-    )
-    return (
-        a.join(b, F.col("qid") < F.col("nid"))
-        .withColumn("cos_sim", dot_expr / (F.col("qnorm") * F.col("nnorm")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select(
-            F.col("qid").alias("id_a"),
-            F.col("nid").alias("id_b"),
-            "cos_sim",
-        )
     )
 
 

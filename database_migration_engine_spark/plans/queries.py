@@ -4744,9 +4744,6 @@ def events_rate_limited_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import stateful as ST
 
     ensure_deterministic(spark)
-    from ..session import ensure_worker_imports
-
-    ensure_worker_imports(spark)
     stream = SE.read_events_stream(spark, sf_dir)
     admitted = ST.rate_limit_first_per_bucket(stream)
     return SE.run_to_memory(admitted, output_mode="append").orderBy("event_id")

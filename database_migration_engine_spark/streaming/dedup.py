@@ -126,7 +126,7 @@ def _pairs(new_bands: DataFrame, idx_bands: DataFrame) -> DataFrame:
         )
         .dropDuplicates(["new_doc", "index_doc"])
     )
-    return out.select("new_doc", "index_doc", _est_jaccard(NUM_HASHES))
+    return out.select("new_doc", "index_doc", _est_jaccard())
 
 
 INDEX_BUCKETS = 8

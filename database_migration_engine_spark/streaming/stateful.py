@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import ensure_worker_imports
+
 PROFILE_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -63,6 +65,7 @@ def _update_profile(
 
 def user_profiles(events: DataFrame) -> DataFrame:
     """Streaming per-user running profile with explicit GroupState."""
+    ensure_worker_imports(events.sparkSession)
     return (
         events.select(
             "user_id",
@@ -142,6 +145,7 @@ def rate_limit_first_per_bucket(events: DataFrame) -> DataFrame:
     first-ARRIVAL-wins, which is what a real collector enforces. State is
     one bucket-id array per user, partitioned by the grouping key in the
     state store — the same shuffle boundary as a groupBy at 100 TB."""
+    ensure_worker_imports(events.sparkSession)
     return (
         events.select("event_id", "user_id", "ts", "event_type")
         .groupBy("user_id")

@@ -48,10 +48,15 @@ def owner_alive(root: str) -> bool:
     try:
         with open(os.path.join(root, _PIDFILE)) as fh:
             pid = int(fh.read().strip())
-        os.kill(pid, 0)
-        return True
     except (OSError, ValueError):
         return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # EPERM: the process exists under another user
+    return True
 
 
 def _sweep_wh_roots(base: str, keep: str) -> None:

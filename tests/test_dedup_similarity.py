@@ -332,7 +332,8 @@ def test_incremental_dedup_finds_all_mirrors(spark):
     (identical text → identical signatures → all bands collide), and no
     index×index pair may appear."""
     from database_migration_engine_spark.operators.dedup import (
-        minhash_lsh_pairs_incremental,
+        lsh_join_presigned,
+        minhash_signatures,
     )
 
     docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
@@ -340,7 +341,9 @@ def test_incremental_dedup_finds_all_mirrors(spark):
     index = docs.filter("doc_id < 450").unionByName(
         new.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000))
     )
-    pairs = minhash_lsh_pairs_incremental(new, index).collect()
+    pairs = lsh_join_presigned(
+        minhash_signatures(new), minhash_signatures(index)
+    ).collect()
     mirror_pairs = {
         (r.new_doc, r.index_doc): r.est_jaccard
         for r in pairs

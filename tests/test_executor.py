@@ -409,3 +409,46 @@ def test_executor_apply_acquires_fence(spark, tmp_path, runner):
     executor.runner = RotatingRunner()
     with pytest.raises(LedgerFencedError):
         executor.apply(_safe_migrations(spark))
+
+
+def _reapply_jobs(spark, tmp_path, n: int) -> int:
+    """Spark jobs a re-apply of the first ``n`` fixture migrations
+    launches, counted through the status tracker under a job group."""
+    migs = fixtures.migrations_df(spark).orderBy("version").limit(n)
+    ex = Executor(
+        ledger=ParquetLedger(spark, str(tmp_path / f"ledger_{n}")),
+        runner=CollectingRunner(),
+    )
+    ex.apply(migs, force=True)
+    sc = spark.sparkContext
+    group = f"reapply-{n}"
+    sc.setJobGroup(group, group)
+    try:
+        ex.apply(migs, force=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [e.status for e in ex.events][-n:] == ["skipped"] * n
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reapply_reads_ledger_once_per_command(spark, tmp_path):
+    """The skip check reads the ledger once per command, not once or
+    twice per migration: a re-apply of 2 and of 6 migrations launches
+    the same number of jobs."""
+    assert _reapply_jobs(spark, tmp_path, 2) == _reapply_jobs(
+        spark, tmp_path, 6
+    )
+
+
+def test_shared_version_second_file_mismatches(spark, executor, ledger,
+                                               runner):
+    """Two files sharing a version in one command: the first applies and
+    is recorded, the second is checked against it and raises."""
+    first = _safe_migrations(spark).filter(F.col("version") == "001")
+    twin = first.withColumn("checksum", F.lit("f" * 64)).withColumn(
+        "file_path", F.lit("001_twin.up.sql")
+    )
+    with pytest.raises(ChecksumMismatchError):
+        executor.apply(first.unionByName(twin))
+    assert len(runner.calls) == 1
+    assert [r.version for r in ledger.applied().collect()] == ["001"]

@@ -213,3 +213,21 @@ def test_ensure_partitioned_prunes_and_is_idempotent(spark):
     assert "PartitionFilters" in plan
     want = orders.filter(F.col("o_year") == 1997).count()
     assert sub.count() == want
+
+
+@pytest.mark.parametrize(
+    "exc, alive",
+    [(ProcessLookupError, False), (PermissionError, True)],
+)
+def test_owner_alive_reads_kill_errno(tmp_path, monkeypatch, exc, alive):
+    """ESRCH means the pidfile's owner is gone; EPERM means it exists
+    under another user, so its root must not be swept."""
+    import os
+
+    WH.write_owner_pidfile(str(tmp_path))
+
+    def kill(pid, sig):
+        raise exc()
+
+    monkeypatch.setattr(os, "kill", kill)
+    assert WH.owner_alive(str(tmp_path)) is alive
