@@ -4,11 +4,14 @@ Migrations apply strictly in version order with fail-fast semantics
 (reference internal/executor/executor.go:120-138) — this loop is
 *deliberately* sequential on the driver: ordering is the product contract,
 so only the data movement inside one migration is distributed. The ledger
-is a parquet table updated with MERGE semantics (anti-join + union) and an
-atomic directory swap; mutual exclusion is a single-writer contract — the
-reference's pg advisory lock (internal/database/advisory_lock.go:12-65)
-has no Spark equivalent, so concurrent drivers must be fenced externally
-(SURVEY.md §7.4).
+is a control-plane table with one row per migration, so the driver
+commits it itself, the way a transaction log is committed: every write is
+a MERGE done as a keyed read-modify-write of ONE parquet file with
+pyarrow, followed by an atomic directory swap — no Spark job per ledger
+write. Mutual exclusion is a single-writer contract — the reference's pg
+advisory lock (internal/database/advisory_lock.go:12-65) has no Spark
+equivalent, so concurrent drivers are serialized by a file lock and a
+fencing token (SURVEY.md §7.4).
 
 SQL execution is pluggable via ``SQLRunner``: ``CollectingRunner`` for
 tests/dry runs, ``JdbcRunner`` for a live database via the JVM's
@@ -29,6 +32,7 @@ import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -256,11 +260,16 @@ class PsqlRunner(SQLRunner):
 
 
 class ParquetLedger:
-    """schema_migrations as a parquet table with MERGE-style upserts.
+    """schema_migrations as one parquet file that the driver commits.
 
-    Writes go to a fresh directory then atomically swap into place —
-    the plain-parquet stand-in for the reference's INSERT … ON CONFLICT
-    atomicity (internal/tracker/tracker.go:96-113).
+    Every write is a MERGE keyed on ``version`` (new row wins): the
+    driver reads the file with pyarrow, changes the rows and writes the
+    replacement to a fresh directory, which then atomically swaps into
+    place — the plain-parquet stand-in for the reference's
+    INSERT … ON CONFLICT atomicity (internal/tracker/tracker.go:96-113).
+    Nothing is cached between writes: each one re-reads the file, so a
+    write always starts from what is on disk. ``df()``/``applied()``
+    stay Spark views for callers that join the ledger.
 
     Cross-process mutual exclusion uses a FENCING TOKEN (r02, closing the
     E12 gap vs the reference's pg advisory lock,
@@ -354,8 +363,7 @@ class ParquetLedger:
     def ensure(self) -> None:
         """CREATE TABLE IF NOT EXISTS (reference internal/tracker/tracker.go:42-49)."""
         if not os.path.exists(self.path):
-            empty = self.spark.createDataFrame([], schema=schemas.SCHEMA_MIGRATIONS)
-            self._swap_in(empty)
+            self._swap_in(_arrow_schema().empty_table())
 
     def df(self) -> DataFrame:
         return self.spark.read.schema(schemas.SCHEMA_MIGRATIONS).parquet(self.path)
@@ -366,60 +374,79 @@ class ParquetLedger:
             self.df().filter(F.col("status") == "applied").orderBy("version")
         )
 
+    def _rows(self):
+        """Every ledger row as a pyarrow Table with the declared schema,
+        read on the driver. Ledgers written by Spark (INT96 ``applied_at``,
+        ``_SUCCESS``/``.crc`` files) read the same way."""
+        import pyarrow.parquet as pq
+
+        schema = _arrow_schema()
+        return pq.read_table(self.path).select(schema.names).cast(schema)
+
+    def _merge(self, new) -> None:
+        """MERGE keyed on version: the rows of ``new`` (a pyarrow Table
+        with the declared schema) replace any rows with their version."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        rows = self._rows()
+        kept = rows.filter(
+            pc.invert(pc.is_in(rows["version"], new["version"]))
+        )
+        self._swap_in(pa.concat_tables([kept, new.cast(rows.schema)]))
+
     def record_applied(
         self, version: str, filename: str, checksum: str, duration_ms: int
     ) -> None:
-        """L3 upsert (reference internal/tracker/tracker.go:96-113). The
-        one-row side is a JVM VALUES relation (not createDataFrame — a
-        Python-RDD plan costs seconds per evaluation)."""
+        """L3 upsert (reference internal/tracker/tracker.go:96-113)."""
+        import pyarrow as pa
 
-        def q(s: str) -> str:
-            return "'" + s.replace("'", "''") + "'"
-
-        new = self.spark.sql(
-            f"SELECT {q(version)} AS version, {q(filename)} AS filename,"
-            f" {q(checksum)} AS checksum,"
-            f" current_timestamp() AS applied_at,"
-            f" CAST({int(duration_ms)} AS INT) AS duration_ms,"
-            f" 'applied' AS status"
-        )
-        self.merge_batch(new)
+        row = {
+            "version": [version],
+            "filename": [filename],
+            "checksum": [checksum],
+            "applied_at": [datetime.now(timezone.utc)],
+            "duration_ms": [int(duration_ms)],
+            "status": ["applied"],
+        }
+        self._merge(pa.Table.from_pydict(row, schema=_arrow_schema()))
 
     def merge_batch(self, new_rows: DataFrame) -> None:
         """Multi-row MERGE keyed on version — the batch is authoritative
         for every version it carries (same new-wins semantics as the
         reference's ON CONFLICT DO UPDATE, tracker.go:96-113). Used by
-        record_applied and the streaming foreachBatch sink; rows must
-        match SCHEMA_MIGRATIONS."""
-        merged = (
-            self.df()
-            .join(new_rows, "version", "left_anti")
-            .unionByName(new_rows.select(*self.df().columns))
+        the streaming foreachBatch sink; rows must match
+        SCHEMA_MIGRATIONS and carry each version once."""
+        self._merge(
+            new_rows.select(*schemas.SCHEMA_MIGRATIONS.names).toArrow()
         )
-        self._swap_in(merged)
 
     def record_rolled_back(self, version: str) -> None:
         """L4 conditional update + affected-rows check
         (reference internal/tracker/tracker.go:116-130)."""
-        current = self.df()
-        if current.filter(F.col("version") == version).count() == 0:
-            raise TargetNotFoundError(f"migration {version} not in ledger")
-        self._swap_in(
-            current.withColumn(
-                "status",
-                F.when(F.col("version") == version, F.lit("rolled_back"))
-                .otherwise(F.col("status")),
-            )
-        )
+        import pyarrow.compute as pc
 
-    def _swap_in(self, df: DataFrame) -> None:
+        rows = self._rows()
+        hit = pc.equal(rows["version"], version)
+        if not pc.any(hit).as_py():
+            raise TargetNotFoundError(f"migration {version} not in ledger")
+        status = rows.schema.get_field_index("status")
+        self._swap_in(rows.set_column(
+            status, rows.schema.field(status),
+            pc.if_else(hit, "rolled_back", rows["status"]),
+        ))
+
+    def _swap_in(self, table) -> None:
+        import pyarrow.parquet as pq
+
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         tmp = os.path.join(
             tempfile.mkdtemp(dir=parent), f"ledger-{uuid.uuid4().hex}"
         )
         # write the replacement BEFORE entering the critical section so
         # the serialized region is only check-fence → rename → rotate
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        os.mkdir(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
         old = self.path + f".old-{uuid.uuid4().hex}"
         with self._fence_critical_section():
             self._check_fence()
@@ -431,6 +458,14 @@ class ParquetLedger:
         if os.path.exists(old):
             shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(os.path.dirname(tmp), ignore_errors=True)
+
+
+def _arrow_schema():
+    """SCHEMA_MIGRATIONS as pyarrow sees it: ``applied_at`` is
+    ``timestamp[us, tz=UTC]`` and ``version`` is non-null."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schemas.SCHEMA_MIGRATIONS)
 
 
 # --- the orchestrator -------------------------------------------------------
@@ -502,17 +537,24 @@ class Executor:
         with AdvisoryFileLock(self.ledger.path):
             self.ledger.acquire_fence()
             self.ledger.ensure()
-            # one ledger read per command: {version: checksum} of the
-            # applied rows, kept current as this loop records migrations
-            applied = {
-                r.version: r.checksum
-                for r in self.ledger.applied()
-                .select("version", "checksum")
-                .collect()
-            }
+            # one ledger read per command, kept current as this loop
+            # records migrations
+            applied = self._applied()
             for mig in self.from_df(migrations):
                 self._apply_one(mig, dry_run, applied)
         return self.events
+
+    def _applied(self) -> dict[str, str]:
+        """{version: checksum} of the applied ledger rows, read on the
+        driver (no Spark job)."""
+        rows = self.ledger._rows().to_pydict()
+        return {
+            version: checksum
+            for version, checksum, status in zip(
+                rows["version"], rows["checksum"], rows["status"]
+            )
+            if status == "applied"
+        }
 
     def _apply_one(
         self, mig: Migration, dry_run: bool, applied: dict[str, str]
@@ -572,13 +614,7 @@ class Executor:
         with AdvisoryFileLock(self.ledger.path):  # withRollbackLock (E12)
             self.ledger.acquire_fence()
             self.ledger.ensure()
-            targets = [
-                r.version
-                for r in self.ledger.applied()
-                .orderBy(F.desc("version"))
-                .limit(steps)
-                .collect()
-            ]
+            targets = sorted(self._applied(), reverse=True)[:steps]
             if not targets:
                 raise NothingToRollbackError("no applied migrations")
             self._rollback_targets(migrations, targets)
@@ -593,7 +629,7 @@ class Executor:
         with AdvisoryFileLock(self.ledger.path):  # withRollbackLock (E12)
             self.ledger.acquire_fence()
             self.ledger.ensure()
-            applied = [r.version for r in self.ledger.applied().collect()]
+            applied = self._applied()
             if target not in applied:
                 raise TargetNotFoundError(f"version {target} is not applied")
             targets = sorted(

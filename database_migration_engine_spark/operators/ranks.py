@@ -217,7 +217,7 @@ def select_at_ranks(
     buckets: int = 32,
     partition_cols: list[str] | None = None,
     boundaries: list[float] | None = None,
-) -> tuple[DataFrame, dict]:
+) -> tuple[DataFrame, int | dict]:
     """Rows at specific global ranks, touching ONLY the buckets that
     contain a target rank (r11 optimization round, guide §1.2).
 
@@ -237,9 +237,11 @@ def select_at_ranks(
     approxQuantile action when the caller derives a monotone boundary
     set itself (any placement is correct — boundaries only balance).
 
-    Returns ``(selected, totals)`` where ``selected`` carries the
+    Returns ``(selected, total)`` where ``selected`` carries the
     partition cols, ``value_col``, the tiebreaks, and ``rn`` (the global
-    rank that matched). Scale shape: same boundary + count passes as
+    rank that matched), and ``total`` is what ``with_global_ranks``
+    returns: the row count (int), or with ``partition_cols`` the dict
+    keyed by the group tuple. Scale shape: same boundary + count passes as
     with_global_ranks, then one broadcast semi-filter and a window over
     ~targets/buckets of the data instead of all of it."""
     pcols = partition_cols or []
@@ -263,7 +265,7 @@ def select_at_ranks(
         totals[g] = totals.get(g, 0) + row["_n"]
     if not counts:
         out = dfb.drop("_bkt").withColumn("rn", F.lit(None).cast("int"))
-        return out.filter(F.lit(False)), (totals if pcols else {(): 0})
+        return out.filter(F.lit(False)), (totals if pcols else 0)
     spark = df.sparkSession
     # resolve each target rank to (bucket, local rank within bucket)
     probe_rows = []
@@ -287,8 +289,12 @@ def select_at_ranks(
         return out.filter(F.lit(False)), (
             totals if pcols else totals.get((), 0)
         )
+    # NULL partition keys sort first (None does not compare with values)
     probe_df = values_df(
-        spark, sorted(set(probe_rows)), [*pcols, "_bkt", "_lrn", "rn"]
+        spark,
+        sorted(set(probe_rows),
+               key=lambda r: tuple((v is not None, v) for v in r)),
+        [*pcols, "_bkt", "_lrn", "rn"],
     )
     order = (
         [F.col(value_col).asc()] if ascending else [F.col(value_col).desc()]

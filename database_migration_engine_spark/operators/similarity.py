@@ -1332,8 +1332,9 @@ def mmr_rerank(
     # to n_queries×pool² similarity rows. ``queries`` must therefore be
     # a bounded re-rank batch — the same contract as
     # cosine_pairs_arrow's query side. A corpus-sized ``queries`` frame
-    # fails fast here instead of silently OOMing the driver.
-    cand_rows = cand.collect()
+    # fails fast here instead of silently OOMing the driver: the
+    # collect itself is capped one row past the bound.
+    cand_rows = cand.limit(MAX_COLLECTED_QUERIES // pool + 1).collect()
     if len(cand_rows) * pool > MAX_COLLECTED_QUERIES:
         raise ValueError(
             f"mmr_rerank: collected pool of {len(cand_rows)} candidate "

@@ -6894,8 +6894,10 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "dev", F.abs(F.col("value") - F.col("med"))
     )
-    med_rows = med.collect()  # ≤5 checkpointed rows — a ~ms action
-    med_mid = sorted(r["med"] for r in med_rows)[len(med_rows) // 2]
+    # ≤5 checkpointed rows — a ~ms action. A group whose median row
+    # holds a NULL value has a NULL median; it places no boundary.
+    meds = sorted(r["med"] for r in med.collect() if r["med"] is not None)
+    med_mid = meds[len(meds) // 2] if meds else 0.0
     boundaries2 = sorted({abs(b - med_mid) for b in boundaries1})
     sel2, _totals2 = RK.select_at_ranks(
         dev.select("event_id", "event_type", "dev"),

@@ -54,7 +54,7 @@ def compact_parquet(
 
     The swap is two renames (current → ``.old``, tmp → current) — the
     same single-filesystem atomic-rename contract the parquet ledger
-    uses (`executor/orchestrator.py` ParquetLedger.swap); a crash
+    uses (`executor/orchestrator.py` ParquetLedger._swap_in); a crash
     between them leaves the ``.old`` directory intact for manual
     recovery, never a half-written dataset. With ``partition_cols`` the
     directory keys are preserved and file sizes are bounded per

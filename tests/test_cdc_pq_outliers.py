@@ -337,3 +337,31 @@ class TestCompactChangelogProperties:
                 ).collect()
             }
             assert got == expect, f"case {case_id}: {rows}"
+
+
+def test_mad_outliers_null_median_group(spark, tmp_path):
+    """A group whose median row holds a NULL value has a NULL median;
+    the other groups' medians and MADs are unaffected."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_migration_engine_spark.plans.queries import QUERIES
+
+    types = ["click"] * 5 + ["view"] * 3
+    values = [1.0, 2.0, 3.0, 4.0, 100.0, None, None, None]
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(len(types)), type=pa.int64()),
+            "ts": pa.array([0] * len(types), type=pa.timestamp("us")),
+            "user_id": pa.array([1] * len(types), type=pa.int64()),
+            "event_type": pa.array(types),
+            "value": pa.array(values, type=pa.float64()),
+            "props": pa.array(["{}"] * len(types)),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "events.parquet"))
+    got = {r.event_type: r for r in
+           QUERIES["mad_outliers"](spark, str(tmp_path)).collect()}
+    assert (got["click"].median_value, got["click"].mad) == (3.0, 1.0)
+    assert got["click"].n_outliers == 1
+    assert got["view"].median_value is None

@@ -5,6 +5,8 @@ danger gate) against a tmpdir parquet ledger and a collecting SQL runner."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -411,32 +413,41 @@ def test_executor_apply_acquires_fence(spark, tmp_path, runner):
         executor.apply(_safe_migrations(spark))
 
 
-def _reapply_jobs(spark, tmp_path, n: int) -> int:
-    """Spark jobs a re-apply of the first ``n`` fixture migrations
-    launches, counted through the status tracker under a job group."""
-    migs = fixtures.migrations_df(spark).orderBy("version").limit(n)
-    ex = Executor(
-        ledger=ParquetLedger(spark, str(tmp_path / f"ledger_{n}")),
-        runner=CollectingRunner(),
-    )
-    ex.apply(migs, force=True)
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through the status tracker
+    under a job group."""
     sc = spark.sparkContext
-    group = f"reapply-{n}"
     sc.setJobGroup(group, group)
     try:
-        ex.apply(migs, force=True)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert [e.status for e in ex.events][-n:] == ["skipped"] * n
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _apply_jobs(spark, tmp_path, n: int, reapply: bool) -> int:
+    """Spark jobs an apply of the first ``n`` fixture migrations
+    launches: a fresh apply, or a re-apply after a first one."""
+    migs = fixtures.migrations_df(spark).orderBy("version").limit(n)
+    ex = Executor(
+        ledger=ParquetLedger(spark, str(tmp_path / f"ledger_{n}_{reapply}")),
+        runner=CollectingRunner(),
+    )
+    if reapply:
+        ex.apply(migs, force=True)
+    jobs = _jobs(spark, f"apply-{n}-{reapply}",
+                 lambda: ex.apply(migs, force=True))
+    want = "skipped" if reapply else "completed"
+    assert [e.status for e in ex.events].count(want) == n
+    return jobs
 
 
 def test_reapply_reads_ledger_once_per_command(spark, tmp_path):
     """The skip check reads the ledger once per command, not once or
     twice per migration: a re-apply of 2 and of 6 migrations launches
     the same number of jobs."""
-    assert _reapply_jobs(spark, tmp_path, 2) == _reapply_jobs(
-        spark, tmp_path, 6
+    assert _apply_jobs(spark, tmp_path, 2, True) == _apply_jobs(
+        spark, tmp_path, 6, True
     )
 
 
@@ -452,3 +463,67 @@ def test_shared_version_second_file_mismatches(spark, executor, ledger,
         executor.apply(first.unionByName(twin))
     assert len(runner.calls) == 1
     assert [r.version for r in ledger.applied().collect()] == ["001"]
+
+
+# --- the driver-committed ledger -------------------------------------------
+
+
+def test_ledger_writes_launch_no_spark_job(spark, tmp_path):
+    """ensure, record_applied and record_rolled_back run on the driver."""
+    led = ParquetLedger(spark, str(tmp_path / "ledger"))
+    led.acquire_fence()
+    assert _jobs(spark, "ledger-ensure", led.ensure) == 0
+    assert _jobs(spark, "ledger-applied", lambda: led.record_applied(
+        "001", "001_a.up.sql", "a" * 64, 1)) == 0
+    assert _jobs(spark, "ledger-rolled-back",
+                 lambda: led.record_rolled_back("001")) == 0
+    assert [(r.version, r.status) for r in led.df().collect()] == [
+        ("001", "rolled_back")]
+
+
+def test_fresh_apply_jobs_do_not_grow_with_migrations(spark, tmp_path):
+    """Recording a migration launches no job: a fresh apply of 2 and of
+    6 migrations launches the same number of jobs."""
+    assert _apply_jobs(spark, tmp_path, 2, False) == _apply_jobs(
+        spark, tmp_path, 6, False
+    )
+
+
+def test_spark_written_ledger_still_works(spark, tmp_path):
+    """A ledger Spark wrote (INT96 applied_at, _SUCCESS and .crc files)
+    takes driver writes: untouched rows keep their applied_at, and Spark
+    reads the result with the declared schema."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    from database_migration_engine_spark import schemas
+
+    path = str(tmp_path / "ledger")
+    t0 = dt.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    rows = [
+        ("001", "001_a.up.sql", "a" * 64, t0, 5, "applied"),
+        ("002", "002_b.up.sql", "b" * 64, t0 + dt.timedelta(hours=1), 7,
+         "applied"),
+    ]
+    spark.createDataFrame(rows, schemas.SCHEMA_MIGRATIONS).coalesce(
+        1).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    part = next(n for n in names if n.endswith(".parquet"))
+    physical = pq.ParquetFile(os.path.join(path, part)).schema.column(3)
+    assert physical.physical_type == "INT96"
+
+    led = ParquetLedger(spark, path)
+    before = {r.version: r.applied_at for r in led.df().collect()}
+    led.record_applied("003", "003_c.up.sql", "c" * 64, 9)
+    led.record_rolled_back("001")
+
+    got = {r.version: (r.status, r.applied_at) for r in led.df().collect()}
+    assert got["001"] == ("rolled_back", before["001"])
+    assert got["002"] == ("applied", before["002"])
+    assert got["003"][0] == "applied"
+    read = spark.read.parquet(path).schema
+    assert [(f.name, f.dataType) for f in read] == [
+        (f.name, f.dataType) for f in schemas.SCHEMA_MIGRATIONS
+    ]

@@ -99,6 +99,28 @@ class TestMmrCollectGuard:
                 emb, emb.filter(F.col("vec_id") < 5), k=2, pool=4
             )
 
+    def test_pool_bound_checked_before_full_collect(self, spark,
+                                                    monkeypatch):
+        """The candidate collect is capped one row past the bound: the
+        8 × 4 pool is never pulled to the driver whole."""
+        emb = read_table(spark, SF_DIR, "embeddings")
+        monkeypatch.setattr(SIM, "MAX_COLLECTED_QUERIES", 12)
+        sizes = []
+        DataFrame = type(emb)
+        collect = DataFrame.collect
+
+        def counting_collect(self):
+            rows = collect(self)
+            sizes.append(len(rows))
+            return rows
+
+        monkeypatch.setattr(DataFrame, "collect", counting_collect)
+        with pytest.raises(ValueError, match="bounded re-rank batch"):
+            SIM.mmr_rerank(
+                emb, emb.filter(F.col("vec_id") < 8), k=2, pool=4
+            )
+        assert sizes and max(sizes) < 8 * 4
+
 
 class TestSpreadInputGate:
     def test_small_file_backed_input_spreads(self, spark):

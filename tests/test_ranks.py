@@ -153,3 +153,31 @@ def test_values_df_rejects_unrenderable_literals(spark):
         RK.values_df(spark, [(datetime.date(2024, 1, 1),)], ["d"])
     with pytest.raises(TypeError):
         RK.values_df(spark, [(float("inf"),)], ["f"])
+
+
+def test_select_at_ranks_empty_input_total_is_int(spark):
+    """Without partition_cols the total is the row count, as in
+    with_global_ranks — 0 on empty input, not a dict."""
+    df = spark.createDataFrame([], "val double, tie long")
+    sel, total = RK.select_at_ranks(
+        df, "val", ["tie"], lambda tot: {(): [1]}, buckets=4
+    )
+    assert total == 0 and isinstance(total, int)
+    assert sel.count() == 0
+
+
+def test_select_at_ranks_null_partition_key(spark):
+    """A NULL partition key does not break the driver-side probe sort;
+    the other groups still get their exact median rows."""
+    rows = [("a", float(v), i) for i, v in enumerate([5, 1, 3])]
+    rows += [("b", float(v), 10 + i) for i, v in enumerate([9, 7])]
+    rows += [(None, float(v), 20 + i) for i, v in enumerate([2, 4, 6])]
+    df = spark.createDataFrame(rows, "g string, val double, tie long")
+    sel, totals = RK.select_at_ranks(
+        df, "val", ["tie"],
+        lambda tot: {g: [(n + 1) // 2] for g, n in tot.items()},
+        buckets=4, partition_cols=["g"],
+    )
+    assert totals == {("a",): 3, ("b",): 2, (None,): 3}
+    got = {r.g: r.val for r in sel.collect() if r.g is not None}
+    assert got == {"a": 3.0, "b": 7.0}
